@@ -2,6 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.SparkSession
 
+import graft.star.StarBuilder
+
 /** Runnable end-to-end pipeline — parity with the reference's `__main__`
   * (/root/reference/src/etl_pipeline.py:285-315): extract CSV, inspect,
   * transform, build + write the star schema as a parquet warehouse.
@@ -30,12 +32,15 @@ object KickstarterMain {
       println(s"[transform] rows=${campaigns.count()} cols=${campaigns.columns.length}")
       Transform.stateCounts(campaigns).collect()
         .foreach(r => println(s"[inspect] state ${r.getString(0)} -> ${r.getLong(1)}"))
-      val counts = graft.star.StarBuilder.runPipeline(spark, csvPath, outDir)
+      // the star schema is built from the cached frame: the CSV is not
+      // parsed again for the load
+      val counts = StarBuilder.writeTables(spark, StarBuilder.build(campaigns), outDir)
+      campaigns.unpersist()
       counts.toSeq.sortBy(_._1)
         .foreach { case (t, n) => println(s"[load] $t rows=$n") }
       // S3 parity: register the warehouse in the session catalog so every
       // table is queryable by name from spark.sql (create_tables.sql:1-43)
-      graft.star.StarBuilder.registerCatalog(spark, outDir)
+      StarBuilder.registerCatalog(spark, outDir)
       println("[load] catalog tables: " +
         spark.catalog.listTables().collect().map(_.name).sorted.mkString(", "))
     } finally spark.stop()

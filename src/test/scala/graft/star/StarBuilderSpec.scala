@@ -1,8 +1,13 @@
 package graft.star
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkTestBase
 import graft.etl.{Extract, Transform}
@@ -90,6 +95,40 @@ class StarBuilderSpec extends SparkTestBase {
     assert(counts == Map(
       "Dim_Date" -> 10L, "Dim_State" -> 6L,
       "Dim_Category" -> 9L, "Fact_Campaigns" -> 11L))
+  }
+
+  test("runPipeline parses the CSV exactly twice: once for the dimensions, once for the fact") {
+    // a private copy of the fixture, so only this pipeline's scans match
+    val dir = Files.createTempDirectory("graft_star_scans")
+    val csv = dir.resolve("campaigns.csv")
+    Files.copy(Paths.get(fixturePath("kickstarter_fixture.csv")), csv)
+    val marker = s"scan_count_marker_${System.nanoTime()}"
+    val markerSeen = new CountDownLatch(1)
+    val csvScans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] &&
+              s.relation.location.rootPaths.exists(_.toString.contains(dir.toString)) =>
+            s"$funcName: ${s.simpleString(80)}"
+        }.foreach(csvScans.add)
+        if (qe.analyzed.output.exists(_.name == marker)) markerSeen.countDown()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val counts = StarBuilder.runPipeline(spark, csv.toString,
+        Files.createTempDirectory("graft_star_scans_out").toString)
+      assert(counts("Fact_Campaigns") == 11L)
+      // execution events arrive in order: once a later query's event is
+      // in, every scan of the pipeline has been seen
+      spark.range(1).toDF(marker).collect()
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "listener events did not arrive")
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val scans = csvScans.asScala.toSeq
+    assert(scans.size == 2, s"CSV scans:\n${scans.mkString("\n")}")
   }
 
   test("S3: registerCatalog makes warehouse tables queryable by name") {
